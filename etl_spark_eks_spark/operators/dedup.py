@@ -5,9 +5,15 @@ SimHash.
 Scale ladder (the 100 TB story):
 - C1 exact: one hash-groupBy shuffle on a 64-hex key. Always first —
   it removes the bulk cheaply.
-- C2 pairwise Jaccard: quadratic per block, so ONLY ever run inside
-  blocks (here: language + token-count band). The blocking predicate is
-  part of the operator's contract, mirrored exactly in the oracle.
+- C2 exact Jaccard: ONLY ever run inside blocks (here: language +
+  token-count band). The blocking predicate is part of the operator's
+  contract, mirrored exactly in the oracle. One kernel,
+  ``set_sim_pairs``, serves every exact caller — self-join
+  (q_c2/c16/c18/c19/c58/c113) or a broadcast batch probing a standing
+  index (q_c27) — on three rungs: ``auto`` (a 1-row vocabulary gate,
+  then a W-word bitmask join, else ``prefix``), ``prefix`` (PPJoin
+  prefix filter, selective on open vocabularies) and ``allpairs``
+  (triangle bucket join, for dense sets where prefixes do not prune).
 - C8 MinHash-LSH: the scale path — per-row signatures (no shuffle),
   band-bucket self-join emits candidate pairs only; pairwise work is
   O(candidates), not O(n^2). Tests assert candidates ⊇ true near-dups.
@@ -74,7 +80,6 @@ def jaccard_near_dedup(
     length_band: float = 0.2,
     shingle_k: int | None = None,
     strategy: str = "prefix",
-    n_buckets: int = 16,
 ) -> DataFrame:
     """Exact-threshold set-similarity self-join: all pairs with Jaccard
     >= ``threshold`` over tokens (default) or k-token shingles
@@ -82,71 +87,15 @@ def jaccard_near_dedup(
     text that shares vocabulary stops matching). Pairs are only
     compared within identical ``block_cols`` values and set sizes
     within ``length_band`` relative difference — both part of the
-    operator's contract, mirrored exactly in the SQL oracle. Both
-    strategies return the identical pair set; they differ only in how
-    candidates are generated.
+    operator's contract, mirrored exactly in the SQL oracle. Returns
+    (doc_id_1 < doc_id_2, jaccard).
 
-    ``strategy="prefix"`` — **prefix-filter join** (PPJoin-family,
-    Chaudhuri et al. 2006): under any global total order on set
-    elements, two sets with Jaccard >= t MUST share at least one
-    element among each set's first ``n - ceil(t*n) + 1`` elements
-    (pigeonhole on the overlap lower bound ceil(t*n)). Sort each
-    hashed set once, explode only that prefix, self-join on the prefix
-    element, distinct the surviving id pairs, fetch the full sets
-    back, verify exact Jaccard. No false negatives. At sf0.1 shingle
-    sets this admits 53k candidates where the length-band blocks alone
-    hold 757k (14x less pairwise work), and the gap widens with corpus
-    size: block sizes grow linearly with N (quadratic pairs) while a
-    prefix bucket only holds docs truly sharing that element. The
-    ceil() subtracts 1e-9 so fp can only lengthen the prefix (superset
-    of candidates), never shorten it (false negatives).
-
-    ``strategy="adaptive"`` — **the C113 playbook** (round-8 verdict:
-    the fix that took that key 26.7 s -> 4.8 s): measure one 1-row
-    statistic — the max per-block vocabulary bit index — and pick the
-    exact path it licenses. Vocabulary fits ``64 * W`` bits (W <=
-    ``_mask_max_words()``, default 8 words = 512 bits; this fixture:
-    31 tokens/lang -> one word) -> BITMASK-SET pairs: each doc folds
-    to W 64-bit integers, i = sum_w bit_count(a_w & b_w), and the
-    pairwise stage is a broadcast hash join whose per-pair verify is
-    2W integer instructions instead of an array intersection (the
-    round-13 multi-word rung — dense-but-bounded vocabularies used to
-    fall off this path at 64 bits and degrade to ~all-pairs prefix
-    candidates). Otherwise -> the exact prefix filter below, which is
-    what an open-vocabulary corpus at 100 TB takes (selective there
-    by Zipf). Both branches have
-    recall EXACTLY 1 — C8's MinHash banding can NOT serve as the
-    candidate source for an oracle-hash-matched operator (recall < 1
-    at any finite (bands, rows); C118's planner quantifies the miss
-    rate), and on this 31-bit token space banding is also *less*
-    selective than the length gate: a 4-5-bit band chunk of a
-    23-of-31-bit mask collides for ~20% of random doc pairs, which is
-    MORE candidate pairs than the blocked length-band join admits.
-    The adaptive gate is the scale story, not a fixture hack: tiny
-    closed vocabularies (enum-like fields, language codes, byte
-    alphabets) are exactly when masks win, and wide vocabularies are
-    exactly when prefixes prune.
-
-    ``strategy="allpairs"`` — **triangle bucket join**: every doc gets
-    a stable hash bucket i in [0, B); the left side fans out to
-    {(i, j) : j >= i}, the right to {(i, j) : i <= j}, so each
-    unordered bucket pair joins exactly once and parallelism is
-    B(B+1)/2 keys per block instead of 1 (a plain block-key self-join
-    would collapse to one task per language). Every same-block pair
-    within the length band pays one intersect.
-
-    Choosing: prefix wins when elements are SELECTIVE (shingles,
-    rare-ish vocabulary) — its filter discards most block pairs before
-    any intersect. It degenerates when every element is frequent: on
-    this corpus's token sets (~23 tokens/doc drawn from a dense shared
-    vocabulary, hottest prefix bucket = 78% of docs) prefix candidates
-    ≈ block pairs, so the explode+distinct overhead buys nothing and
-    allpairs is 2x faster. Shingle sets are selective by construction
-    (3-gram hits are phrasing-specific; hottest bucket 24 of 5000
-    docs); q_c16 uses prefix, q_c2 uses allpairs. Document-frequency
-    prefix ordering (classic PPJoin) was measured and does NOT rescue
-    the dense case — with a uniformly dense vocabulary ALL elements
-    are frequent, so df-ordering just reorders equals.
+    Tokenize (or shingle) and hash, then ``set_sim_pairs``:
+    ``strategy`` names its rung — ``"adaptive"`` is the kernel's
+    ``"auto"`` gate, ``"prefix"`` and ``"allpairs"`` pin a rung. Every
+    strategy returns the identical pair set; the kernel docstring says
+    what each costs and when it wins (q_c16 runs prefix on selective
+    shingles, q_c2 allpairs on dense token sets, q_c18/q_c58 auto).
 
     Tokens are xxhash64-hashed to longs BEFORE the pairwise stage:
     ``array_intersect`` on primitive array<long> is ~2x the throughput
@@ -155,28 +104,21 @@ def jaccard_near_dedup(
     sizes — hence Jaccard values — are preserved up to a 2^-64
     collision, so the exact SQL oracle still matches.
     """
-    # Fan-out width (round 12): the adaptive strategy's mask path does
-    # only integer-codegen work per row after tokenization, so its
-    # fixture fan-out derives from the scan size (adaptive_width, the
-    # _assign_width pattern) instead of full session width — measured
-    # ~0.7 s off q_c18 at sf0.1. The prefix/allpairs strategies keep
-    # the full widen: their per-pair array_intersect verify is
-    # interpreted, which is exactly the regime widen() exists for.
-    # (The adaptive->prefix fallback inherits the narrow width; it
-    # only fires on wide-vocab corpora, where at scale the scan
-    # already carries the partitions and widen is a no-op.)
-    wdf = (
-        widen(df, adaptive_width(df)) if strategy == "adaptive"
-        else widen(df)
-    )
+    rung = "auto" if strategy == "adaptive" else strategy
+    # Fan-out width: the auto rung's mask path does only integer-codegen
+    # work per row after tokenization, so its fan-out derives from the
+    # scan size (adaptive_width, the _assign_width pattern) instead of
+    # full session width — measured ~0.7 s off q_c18 at sf0.1. The
+    # prefix/allpairs rungs keep the full widen: their per-pair
+    # array_intersect verify is interpreted, which is exactly the
+    # regime widen() exists for (the kernel re-widens its own
+    # auto -> prefix fallback).
+    wdf = widen(df, adaptive_width(df)) if rung == "auto" else widen(df)
     if shingle_k is None:
-        sets = F.array_distinct(
-            F.transform(tokenize(F.col(text_col)), lambda t: F.xxhash64(t))
-        )
-        toks = wdf.select(
+        sets = wdf.select(
             F.col(id_col).alias("doc_id"),
             *[F.col(c) for c in block_cols],
-            F.array_sort(sets).alias("toks"),
+            token_hashes(tokenize(F.col(text_col))).alias("toks"),
         )
     else:
         # Two projections on purpose: the ordered token-hash array must
@@ -188,118 +130,278 @@ def jaccard_near_dedup(
             *[F.col(c) for c in block_cols],
             ordered_token_hashes(tokenize(F.col(text_col))).alias("th"),
         )
-        toks = th.select(
+        sets = th.select(
             "doc_id",
             *block_cols,
-            F.array_sort(
-                F.array_distinct(shingle_hashes("th", shingle_k))
-            ).alias("toks"),
+            F.array_distinct(shingle_hashes("th", shingle_k)).alias("toks"),
         )
-    if strategy == "adaptive":
-        # The mask path never touches the sorted ARRAY form — it folds a
-        # long-form (doc, token-hash) explode straight into bit masks,
-        # so the array_sort + array persist below would be pure
-        # overhead; build the explode directly (array_distinct is still
-        # free correctness margin — bit_or is idempotent, and count(*)
-        # over the distinct explode is the per-block df).
-        tok_long = toks.select(
-            "doc_id", *block_cols, F.explode("toks").alias("tok")
-        )
-        fit = _block_bitmask_table(tok_long, block_cols)
-        if fit is not None:
-            masked, n_words = fit
-            return _bitmask_exact_pairs(
-                masked, block_cols, threshold, length_band, n_words
-            )
-        # Fallback boundary (round 12): the adaptive entry narrowed the
-        # fan-out for the mask path's codegen work, but the prefix
-        # machinery below is INTERPRETED (per-pair array_intersect) —
-        # re-widen the signature table to full session width before it
-        # (a cheap repartition of ids + hashed sets; the 10x probe
-        # measured the narrow fallback superlinear without this).
-        toks = widen(toks)
-        strategy = "prefix"
-    # The signature table feeds multiple consumers (prefix explode +
-    # two array fetch-backs, or the triangle join's two sides) whose
-    # pruned schemas differ, so exchange reuse can never fire and each
-    # consumer would re-run the whole tokenize+hash+sort pipeline
-    # (measured 6.5x total runtime at sf0.1). Persist it: ids + hashed
-    # sets only — 5-6 orders of magnitude smaller than the text,
-    # MEMORY_AND_DISK so executors spill rather than OOM. This is also
-    # the production shape: at 100 TB the signature table is what you'd
-    # materialize (or write out) before any pairwise stage.
-    toks = toks.withColumn("n_toks", F.size("toks")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    pairs = set_sim_pairs(sets, block_cols, threshold, length_band, rung)
+    return pairs.select(
+        "doc_id_1",
+        "doc_id_2",
+        (F.col("i").cast("double") / F.col("u")).alias("jaccard"),
     )
-    if strategy == "allpairs":
-        return _allpairs_triangle_join(
-            toks, block_cols, threshold, length_band, n_buckets
-        )
-    if strategy != "prefix":
-        raise ValueError(f"unknown strategy: {strategy!r}")
 
+
+# Width cap (in 64-bit words) for the auto rung's mask path:
+# vocabularies up to 64 * MASK_MAX_WORDS distinct tokens per block keep
+# the codegen bitmask verify (W ANDs + W popcounts per pair); wider
+# vocabularies take the exact prefix filter, which is selective exactly
+# there (genuinely open vocabularies prune by Zipf, where a dense mask
+# would cost O(vocab/64) per pair AND stop fitting a broadcast row).
+# 8 words = 512 bits — a mask still smaller than the sorted hash array
+# it replaces for typical ~23-token sets.
+MASK_MAX_WORDS = 8
+# Hash buckets of the self-join allpairs rung: B(B+1)/2 = 136 join keys
+# per block instead of 1.
+ALLPAIRS_BUCKETS = 16
+
+
+def set_sim_pairs(
+    sets: DataFrame,
+    block_cols: list[str],
+    threshold: float,
+    length_band: float,
+    rung: str = "auto",
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """The exact set-similarity join every Jaccard caller shares: all
+    pairs of sets in the same ``block_cols`` block whose sizes differ
+    by at most ``length_band * max`` and whose Jaccard is >=
+    ``threshold``.
+
+    ``sets`` is (doc_id, *block_cols, toks) with ``toks`` a DISTINCT
+    array<long> (hashed tokens or shingles, any order). With
+    ``probe=None`` this is a self-join returning doc_id_1 < doc_id_2.
+    With a ``probe`` frame of the same shape it is bipartite: doc_id_1
+    comes from ``sets`` (the standing index, streamed) and doc_id_2
+    from ``probe`` (the arriving batch, broadcast), so no pair stage
+    shuffles the index. Extra columns are ignored. Returns integer
+    (doc_id_1, doc_id_2, i, u) — intersection and union sizes, so
+    callers derive J = i/u or fold integer bands without comparing a
+    float. The length gate and the threshold bound run inside the
+    join. Every rung returns the identical rows: recall
+    is EXACTLY 1, which the hash-matched oracles require (MinHash
+    banding, recall < 1 at any finite (bands, rows), can never be the
+    candidate source here).
+
+    The frames the kernel persisted ride on the result as ``held``;
+    a caller that materializes the pairs may release them.
+
+    Rungs — one ladder, the gate picks from a measured data statistic:
+
+    ``"auto"`` — read ONE 1-row statistic, the max per-block vocabulary
+    bit index (``_block_bitmask_table``). When the vocabulary fits
+    ``64 * W`` bits (W <= ``MASK_MAX_WORDS``) -> BITMASK-SET pairs:
+    each doc folds to W 64-bit integers, i = sum_w bit_count(a_w &
+    b_w), and the pair stage is a broadcast hash join whose per-pair
+    verify is 2W integer instructions inside whole-stage codegen
+    instead of an array intersection, with no shuffle reaching it.
+    Otherwise -> ``"prefix"``, re-widened to full session width first
+    (auto callers narrow the fan-out for the mask path's codegen work;
+    the prefix verify is interpreted, and the 10x probe measured the
+    narrow fallback superlinear). Tiny closed vocabularies (enum-like
+    fields, language codes, this fixture's 31 tokens/lang) are exactly
+    when masks win, and open vocabularies exactly when prefixes prune:
+    a 100 TB open-vocabulary corpus takes the prefix rung. On a dense
+    vocabulary MinHash banding is also LESS selective than the length
+    gate — a 4-5-bit band chunk of a 23-of-31-bit mask collides for
+    ~20% of random doc pairs.
+
+    ``"prefix"`` — prefix-filter join (PPJoin family, Chaudhuri et al.
+    2006; AllPairs, Bayardo et al. WWW'07): under any global total
+    order on set elements (here the long order of the sorted hashes),
+    two sets with Jaccard >= t MUST share an element among each one's
+    first ``n - ceil(t*n) + 1`` (pigeonhole on the overlap lower bound
+    ceil(t*n)). Explode only that prefix, equi-join on the element,
+    distinct the id pairs, fetch the full sets back, verify. The ceil()
+    subtracts 1e-9 so fp can only lengthen the prefix (superset of
+    candidates), never shorten it. At sf0.1 shingle sets this admits
+    53k candidates where the length-band blocks alone hold 757k, and
+    the gap widens with corpus size: block sizes grow linearly with N
+    (quadratic pairs) while a prefix bucket only holds docs truly
+    sharing that element. It degenerates when every element is
+    frequent — on dense token sets (~23 tokens/doc from a shared
+    vocabulary, hottest prefix bucket = 78% of docs) candidates ≈
+    block pairs; document-frequency ordering (classic PPJoin) was
+    measured and does NOT rescue that case, since with a uniformly
+    dense vocabulary all elements are frequent.
+
+    ``"allpairs"`` — every same-block pair inside the length band pays
+    one intersect: the triangle bucket fan-out for a self-join
+    (``_allpairs_triangle_join``), a broadcast block join for a probe.
+    Where prefix candidates ≈ block pairs the explode+distinct buys
+    nothing and allpairs is 2x faster (q_c2's dense token sets).
+    """
+    on = (
+        F.col("a.doc_id") < F.col("b.doc_id") if probe is None else F.lit(True)
+    )
+    if rung == "auto":
+        fit = _block_bitmask_table(sets, block_cols, probe)
+        if fit is None:
+            return set_sim_pairs(
+                widen(sets), block_cols, threshold, length_band, "prefix", probe
+            )
+        a, b, n_words, held = fit
+        pairs = _verified_join(
+            a.alias("a"),
+            F.broadcast(b.alias("b")),
+            _mask_intersection(n_words).cast("long"),
+            on,
+            block_cols,
+            threshold,
+            length_band,
+        )
+    elif rung in ("prefix", "allpairs"):
+        # The signature table feeds several consumers (prefix explode +
+        # fetch-back, or the triangle join's two sides) whose pruned
+        # schemas differ, so exchange reuse can never fire and each
+        # consumer would re-run the whole tokenize+hash+sort pipeline
+        # (measured 6.5x total runtime at sf0.1). Persist it: ids +
+        # hashed sets only — 5-6 orders of magnitude smaller than the
+        # text, MEMORY_AND_DISK so executors spill rather than OOM. This
+        # is also the production shape: at 100 TB the signature table is
+        # what you'd materialize (or write out) before any pairwise
+        # stage. Only the prefix rung needs the sorted order.
+        sort = rung == "prefix"
+        sig = _signature(sets, block_cols, sort)
+        psig = sig if probe is None else _signature(probe, block_cols, sort)
+        held = [sig] if probe is None else [sig, psig]
+        if rung == "prefix":
+            pairs = _prefix_pairs(
+                sig, psig, on, block_cols, threshold, length_band
+            )
+        elif probe is None:
+            pairs = _allpairs_triangle_join(
+                sig, block_cols, threshold, length_band
+            )
+        else:
+            pairs = _verified_join(
+                sig.alias("a"),
+                F.broadcast(psig.alias("b")),
+                F.size(F.array_intersect("a.toks", "b.toks")),
+                on,
+                block_cols,
+                threshold,
+                length_band,
+            )
+    else:
+        raise ValueError(f"unknown rung: {rung!r}")
+    pairs.held = held
+    return pairs
+
+
+def _signature(sets: DataFrame, block_cols: list[str], sort: bool):
+    """The persisted (doc_id, *block_cols, toks, n_toks) table."""
+    toks = F.array_sort("toks") if sort else F.col("toks")
+    return (
+        sets.select("doc_id", *block_cols, toks.alias("toks"))
+        .withColumn("n_toks", F.size("toks"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _pair_gate(block_cols: list[str], length_band: float) -> Column:
+    """Same block, and set sizes ``a.n_toks``/``b.n_toks`` within the
+    length band."""
+    na, nb = F.col("a.n_toks"), F.col("b.n_toks")
+    cond = F.abs(na - nb) <= length_band * F.greatest(na, nb)
+    for c in block_cols:
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    return cond
+
+
+def _bound(i: Column, s: Column, threshold: float) -> Column:
+    """Threshold predicate in multiplied form: J >= t <=>
+    i*(1+t) >= t*(n1+n2), for overlap ``i`` and size sum ``s``. It
+    references the intersect expression ONCE (the division form costs
+    two intersect builds per pair, and the intersect is the entire
+    verify cost). The 1e-6 slack makes fp rounding inclusive-only:
+    attainable Jaccard values are ratios of set sizes, so the nearest
+    value distinct from t differs by >= 1/(q*(n1+n2)) for t = p/q —
+    orders of magnitude above both the slack and double rounding for
+    q <= 100 and sets < 10^4 tokens. Within that domain this IS the
+    exact predicate (the DuckDB oracles agree, and at t = 1/2 it is
+    q_c113's integer 2i >= u), so no post-filter."""
+    return i.cast("double") * (1.0 + threshold) >= (
+        threshold * s.cast("double") - 1e-6
+    )
+
+
+def _verified_join(
+    a: DataFrame,
+    b: DataFrame,
+    i: Column,
+    on: Column,
+    block_cols: list[str],
+    threshold: float,
+    length_band: float,
+) -> DataFrame:
+    """Join sides aliased ``a``/``b`` under ``on`` plus the pair gate and
+    the threshold bound for overlap ``i``; (doc_id_1, doc_id_2, i, u)."""
+    s = F.col("a.n_toks") + F.col("b.n_toks")
+    cond = on & _pair_gate(block_cols, length_band) & _bound(i, s, threshold)
+    return a.join(b, cond).select(
+        F.col("a.doc_id").alias("doc_id_1"),
+        F.col("b.doc_id").alias("doc_id_2"),
+        i.alias("i"),
+        (s - i).alias("u"),
+    )
+
+
+def _prefix_pairs(
+    sig: DataFrame,
+    psig: DataFrame,
+    on: Column,
+    block_cols: list[str],
+    threshold: float,
+    length_band: float,
+) -> DataFrame:
+    """The prefix rung over sorted signature tables (``psig is sig`` for
+    a self-join; otherwise ``psig`` is the broadcast probe side)."""
+    side = (lambda df: df) if psig is sig else F.broadcast
     prefix_len = (
         F.col("n_toks")
         - F.ceil(F.lit(threshold) * F.col("n_toks") - 1e-9)
         + 1
     ).cast("int")
-    pref = toks.select(
-        "doc_id",
-        *block_cols,
-        "n_toks",
-        F.explode(F.slice("toks", F.lit(1), prefix_len)).alias("p"),
-    )
-    a, b = pref.alias("a"), pref.alias("b")
-    cond = (
-        (F.col("a.p") == F.col("b.p"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (
-            F.abs(F.col("a.n_toks") - F.col("b.n_toks"))
-            <= length_band * F.greatest(F.col("a.n_toks"), F.col("b.n_toks"))
+
+    def prefix(s: DataFrame) -> DataFrame:
+        return s.select(
+            "doc_id",
+            *block_cols,
+            "n_toks",
+            F.explode(F.slice("toks", F.lit(1), prefix_len)).alias("p"),
         )
-    )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+
+    def fetch(s: DataFrame, k: int) -> DataFrame:
+        return s.select(
+            F.col("doc_id").alias(f"doc_id_{k}"),
+            F.col("toks").alias(f"toks_{k}"),
+            F.col("n_toks").alias(f"n_{k}"),
+        )
+
+    a, b = prefix(sig).alias("a"), side(prefix(psig).alias("b"))
     cand = (
-        a.join(b, cond)
+        a.join(
+            b,
+            (F.col("a.p") == F.col("b.p"))
+            & on
+            & _pair_gate(block_cols, length_band),
+        )
         .select(
             F.col("a.doc_id").alias("doc_id_1"),
             F.col("b.doc_id").alias("doc_id_2"),
         )
         .distinct()
     )
-
-    sa = toks.select(
-        F.col("doc_id").alias("doc_id_1"),
-        F.col("toks").alias("toks_1"),
-        F.col("n_toks").alias("n_1"),
+    pairs = cand.join(fetch(sig, 1), "doc_id_1").join(
+        side(fetch(psig, 2)), "doc_id_2"
     )
-    sb = toks.select(
-        F.col("doc_id").alias("doc_id_2"),
-        F.col("toks").alias("toks_2"),
-        F.col("n_toks").alias("n_2"),
-    )
-    pairs = cand.join(sa, "doc_id_1").join(sb, "doc_id_2")
-    inter = F.size(F.array_intersect("toks_1", "toks_2"))
+    i = F.size(F.array_intersect("toks_1", "toks_2"))
     s = F.col("n_1") + F.col("n_2")
-    # Threshold predicate in multiplied form: J >= t <=>
-    # inter*(1+t) >= t*(n1+n2). It references the intersect expression
-    # ONCE (the division form costs two intersect builds per pair, and
-    # the intersect is the entire verify cost). The 1e-6 slack makes fp
-    # rounding inclusive-only: attainable Jaccard values are ratios of
-    # set sizes, so the nearest value distinct from t differs by
-    # >= 1/(q*(n1+n2)) for t = p/q — orders of magnitude above both the
-    # slack and double rounding for q <= 100 and sets < 10^4 tokens.
-    # Within that domain this IS the exact predicate (the DuckDB
-    # oracles agree), so no post-filter.
-    bound = inter.cast("double") * (1.0 + threshold) >= (
-        threshold * s.cast("double") - 1e-6
-    )
-    union = s - inter
-    return pairs.filter(bound).select(
-        "doc_id_1",
-        "doc_id_2",
-        (inter.cast("double") / union).alias("jaccard"),
+    return pairs.filter(_bound(i, s, threshold)).select(
+        "doc_id_1", "doc_id_2", i.alias("i"), (s - i).alias("u")
     )
 
 
@@ -308,19 +410,22 @@ def _allpairs_triangle_join(
     block_cols: list[str],
     threshold: float,
     length_band: float,
-    n_buckets: int,
 ) -> DataFrame:
-    """All same-block pairs via the triangle bucket fan-out (see
-    ``jaccard_near_dedup``): bucket i joins bucket j >= i exactly once,
-    restoring parallelism that a plain block-key self-join loses."""
+    """All same-block pairs of a self-join via the triangle bucket
+    fan-out: every doc gets a stable hash bucket i in [0, B); the left
+    side fans out to {(i, j) : j >= i}, the right to {(i, j) : i <= j},
+    so each unordered bucket pair joins exactly once and parallelism is
+    B(B+1)/2 keys per block instead of 1 (a plain block-key self-join
+    would collapse to one task per language)."""
+    n = ALLPAIRS_BUCKETS
     toks = toks.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
+        "bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n)).cast("int")
     )
     left = toks.withColumn(
         "pair",
         F.explode(
             F.transform(
-                F.sequence(F.col("bucket"), F.lit(n_buckets - 1)),
+                F.sequence(F.col("bucket"), F.lit(n - 1)),
                 lambda j: F.struct(F.col("bucket").alias("i"), j.alias("j")),
             )
         ),
@@ -334,73 +439,51 @@ def _allpairs_triangle_join(
             )
         ),
     )
-    a, b = left.alias("a"), right.alias("b")
-    cond = (F.col("a.pair") == F.col("b.pair")) & (
+    on = (F.col("a.pair") == F.col("b.pair")) & (
         # same-bucket key (i==i): order by id to avoid self/dup pairs;
         # cross-bucket keys join disjoint doc sets, any id order occurs.
         (F.col("a.doc_id") < F.col("b.doc_id"))
         | (F.col("a.bucket") != F.col("b.bucket"))
-    ) & (
-        F.abs(F.col("a.n_toks") - F.col("b.n_toks"))
-        <= length_band * F.greatest(F.col("a.n_toks"), F.col("b.n_toks"))
     )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    s = F.col("a.n_toks") + F.col("b.n_toks")
-    # Same multiplied-form threshold predicate as the prefix branch —
-    # one intersect per rejected pair, fp slack inclusive-only.
-    bound = inter.cast("double") * (1.0 + threshold) >= (
-        threshold * s.cast("double") - 1e-6
+    pairs = _verified_join(
+        left.alias("a"),
+        right.alias("b"),
+        F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))),
+        on,
+        block_cols,
+        threshold,
+        length_band,
     )
-    cond = cond & bound
-    union = s - inter
-    return a.join(b, cond).select(
-        F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id_1"),
-        F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id_2"),
-        (inter.cast("double") / union).alias("jaccard"),
+    return pairs.select(
+        F.least("doc_id_1", "doc_id_2").alias("doc_id_1"),
+        F.greatest("doc_id_1", "doc_id_2").alias("doc_id_2"),
+        "i",
+        "u",
     )
 
 
-def _mask_max_words() -> int:
-    """Width cap (in 64-bit words) for the dense set-mask rung
-    (round 13, verdict task 1): vocabularies up to ``64 * W`` distinct
-    tokens per block keep the codegen bitmask verify (W ANDs + W
-    popcounts per pair); wider vocabularies fall back to the exact
-    prefix filter, which is selective exactly there (genuinely open
-    vocabularies prune by Zipf, where a dense mask would cost
-    O(vocab/64) per pair AND stop fitting a broadcast row). Default 8
-    words = 512 bits — a mask still smaller than the sorted hash
-    array it replaces for typical ~23-token sets; the env knob is a
-    deployment override, not a fixture tune."""
-    import os as _os
-
-    return max(1, int(_os.environ.get("SPARK_GRAFT_MASK_WORDS", "8")))
-
-
-def _mask_word_cols(n_words: int, bit_col: str = "bit") -> list:
+def _mask_word_cols(n_words: int) -> list:
     """The per-word ``bit_or`` fold columns m0..m{W-1}: token with bit
     index b sets bit (b mod 64) of word (b div 64). Single-word keeps
     the exact legacy expression (shift over the raw index)."""
     if n_words == 1:
-        return [F.bit_or(F.expr(f"shiftleft(1L, {bit_col})")).alias("m0")]
+        return [F.bit_or(F.expr("shiftleft(1L, bit)")).alias("m0")]
     return [
         F.bit_or(
             F.when(
-                F.col(bit_col).between(64 * w, 64 * w + 63),
-                F.expr(f"shiftleft(1L, {bit_col} - {64 * w})"),
+                F.col("bit").between(64 * w, 64 * w + 63),
+                F.expr(f"shiftleft(1L, bit - {64 * w})"),
             ).otherwise(F.lit(0).cast("long"))
         ).alias(f"m{w}")
         for w in range(n_words)
     ]
 
 
-def _mask_popcount(n_words: int, side: str | None = None):
-    """``bit_count`` summed over the mask words (set size / overlap)."""
-    pre = f"{side}." if side else ""
-    out = F.bit_count(F.col(f"{pre}m0"))
+def _mask_popcount(n_words: int):
+    """``bit_count`` summed over the mask words (the set size)."""
+    out = F.bit_count(F.col("m0"))
     for w in range(1, n_words):
-        out = out + F.bit_count(F.col(f"{pre}m{w}"))
+        out = out + F.bit_count(F.col(f"m{w}"))
     return out
 
 
@@ -414,35 +497,37 @@ def _mask_intersection(n_words: int):
     return out
 
 
-def _block_bitmask_table(tok: DataFrame, block_cols: list[str]):
-    """Fold each doc's hashed token set into a W-word (W <=
-    ``_mask_max_words()``) bitmask, or None when any block's
-    vocabulary exceeds ``64 * W`` distinct tokens.
+def _block_bitmask_table(
+    sets: DataFrame, block_cols: list[str], probe: DataFrame | None = None
+):
+    """The auto rung's gate and fold: each doc's set (of ``sets``, and
+    of ``probe`` when given) as a W-word (W <= ``MASK_MAX_WORDS``)
+    bitmask, or None when any block's vocabulary exceeds ``64 * W``
+    distinct tokens — or the input is empty (max() is NULL) — which
+    tells the kernel to take the exact prefix rung.
 
-    The C113 playbook, generalized for ``jaccard_near_dedup``: a
-    per-block vocabulary table assigns each token a rarest-first bit
-    index (``row_number`` over (df, tok) — a window over the VOCAB
-    table, |blocks|·|vocab| rows, never the corpus). ``tok`` is the
-    long form (doc_id, *block_cols, tok) with per-doc-DISTINCT token
-    hashes. ``None`` (vocabulary too wide, or an empty corpus — max()
-    is NULL) tells the caller to fall back to the exact prefix filter,
-    which is the path a real open-vocabulary corpus takes at scale.
-
-    Round 13 (verdict task 1 — the dense-vocab scale-killer): the
-    single-long mask grew a MULTI-WORD rung. The gate reads the max
-    bit index FIRST (the same single 1-row agg job over the persisted
-    vocab table as before — shiftleft wraps silently at >= 64, so no
-    mask is ever planned before the width is known), then builds the
-    fold at exactly ceil((vmax+1)/64) words. Returns (masked_df,
-    n_words). Persisting the fold matters because the probe side AND
-    the broadcast build both read it; materialization stays LAZY —
-    the fold runs inside the consumer's first action. Callers that
-    narrow the shuffle width for an iterative loop must checkpoint
-    their pair join first so the fold materializes at full session
-    width (q_c18/q_c58 do; same caller contract
+    A per-block vocabulary table over both sides assigns each token a
+    rarest-first bit index (``row_number`` over (df, tok) — a window
+    over the VOCAB table, |blocks|·|vocab| rows, never the corpus). The
+    gate reads the max bit index FIRST (one 1-row agg job over the
+    persisted vocab table — shiftleft wraps silently at >= 64, so no
+    mask is ever planned before the width is known), then builds each
+    side's fold at exactly ceil((vmax+1)/64) words. Returns (index
+    masks, probe masks, n_words, persisted frames). A self-join's one
+    fold is persisted because the probe side AND the broadcast build
+    both read it (each bipartite side is read once); materialization
+    stays LAZY — the fold runs inside the consumer's first action.
+    Callers that narrow the shuffle width for an iterative loop must
+    checkpoint their pair join first so the fold materializes at full
+    session width (q_c18/q_c58 do; same caller contract
     connected_components documents)."""
+    toks = [
+        s.select("doc_id", *block_cols, F.explode("toks").alias("tok"))
+        for s in ([sets] if probe is None else [sets, probe])
+    ]
+    vocab = toks[0] if probe is None else toks[0].unionByName(toks[1])
     bit_tbl = (
-        tok.groupBy(*block_cols, "tok")
+        vocab.groupBy(*block_cols, "tok")
         .agg(F.count("*").alias("df"))
         .withColumn(
             "bit",
@@ -455,53 +540,21 @@ def _block_bitmask_table(tok: DataFrame, block_cols: list[str]):
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     vmax = bit_tbl.agg(F.max("bit").alias("m")).first()["m"]
-    if vmax is None or vmax >= 64 * _mask_max_words():
+    if vmax is None or vmax >= 64 * MASK_MAX_WORDS:
         bit_tbl.unpersist()
         return None
     n_words = vmax // 64 + 1
-    masked = (
-        tok.join(F.broadcast(bit_tbl), [*block_cols, "tok"])
+    masks = [
+        t.join(F.broadcast(bit_tbl), [*block_cols, "tok"])
         .groupBy("doc_id", *block_cols)
         .agg(*_mask_word_cols(n_words))
         .withColumn("n_toks", _mask_popcount(n_words).cast("int"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return masked, n_words
-
-
-def _bitmask_exact_pairs(
-    masked: DataFrame,
-    block_cols: list[str],
-    threshold: float,
-    length_band: float,
-    n_words: int = 1,
-) -> DataFrame:
-    """Exact Jaccard >= ``threshold`` pairs when every doc's set is a
-    W-word bitmask: i = sum_w bit_count(m_w_a & m_w_b), u = n_a + n_b
-    - i — the per-pair verify drops from an array intersection to 2W
-    integer instructions inside whole-stage codegen, and the probe
-    side is a doc-count-sized broadcast (one row per doc, 8W-byte
-    mask), so NO shuffle reaches the pair stage. Same multiplied-form
-    threshold predicate as the prefix branch (inclusive-only fp
-    slack), so the pair set is bit-identical to allpairs/prefix."""
-    a, b = masked.alias("a"), F.broadcast(masked.alias("b"))
-    cond = (F.col("a.doc_id") < F.col("b.doc_id")) & (
-        F.abs(F.col("a.n_toks") - F.col("b.n_toks"))
-        <= length_band * F.greatest(F.col("a.n_toks"), F.col("b.n_toks"))
-    )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    i = _mask_intersection(n_words).cast("long")
-    s = (F.col("a.n_toks") + F.col("b.n_toks")).cast("long")
-    bound = i.cast("double") * (1.0 + threshold) >= (
-        threshold * s.cast("double") - 1e-6
-    )
-    u = s - i
-    return a.join(b, cond & bound).select(
-        F.col("a.doc_id").alias("doc_id_1"),
-        F.col("b.doc_id").alias("doc_id_2"),
-        (i.cast("double") / u).alias("jaccard"),
-    )
+        for t in toks
+    ]
+    if probe is not None:
+        return masks[0], masks[1], n_words, [bit_tbl]
+    masked = masks[0].persist(StorageLevel.MEMORY_AND_DISK)
+    return masked, masked, n_words, [bit_tbl, masked]
 
 
 @query(
@@ -1230,12 +1283,12 @@ def q_c18_dedup_clusters(spark, sf_dir):
     cluster ids.
 
     Candidate generation is ``strategy="adaptive"`` (round-8 verdict
-    task 1): the C113 exact-path gate (64-bit set masks here, exact
+    task 1): set_sim_pairs' auto rung (W-word set masks here, exact
     prefix filter for open vocabularies) replaces the quadratic
     allpairs triangle join that made this the bench's second-slowest
-    key, with a bit-identical pair set — the allpairs form survives
+    key, with a bit-identical pair set — the allpairs rung survives
     as the pytest recall cross-check
-    (tests/test_dedup.py::test_adaptive_pairs_match_allpairs)."""
+    (tests/test_tier_c.py::test_adaptive_pairs_match_allpairs)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = jaccard_near_dedup(
         d, "text", "doc_id", ["lang"], 0.8, 0.2, strategy="adaptive"
@@ -1301,44 +1354,46 @@ def q_c27_incremental_dedup(spark, sf_dir):
     Since round 10 the demo IS the scale plan (r9 verdict task 4 —
     the previous form re-tokenized the corpus and lang-block
     broadcast-joined batch x corpus per ingest): the corpus text is
-    read ONCE into a persisted INDEX (sha-256, sorted token hashes,
-    set size), and both probes consume only index columns:
+    read ONCE into a persisted INDEX (sha-256, distinct token hashes),
+    and both probes consume only index columns:
 
     - EXACT rides C128's bitmap: a 128 KiB presence array broadcast
       as a map-side bit test, misses short-circuit as provably novel,
       hits exact-confirm against the index's (h, doc_id) columns with
       the candidates broadcast — the corpus never shuffles.
-    - NEAR rides the exact PREFIX-FILTER index (the
-      jaccard_near_dedup "prefix" machinery, bipartite): each side
-      explodes only the first n - ceil(0.8n) + 1 elements of its
-      sorted hash set, batch prefixes broadcast into the element
-      equi-join, and the CONTRACT predicates (same lang, set sizes
-      within 20%, exact Jaccard >= 0.8 on the indexed arrays) verify
-      each candidate. Recall is EXACTLY 1 by the pigeonhole argument
-      — no probabilistic-recall caveat needed for the hash oracle.
+    - NEAR is one bipartite ``set_sim_pairs`` call: the batch sets
+      are the broadcast probe, the corpus sets the streamed index, and
+      the kernel's auto gate takes the W-word mask rung while the
+      per-lang vocabulary fits (summed bit_count inside whole-stage
+      codegen — this key's interpreted per-candidate array_intersect
+      verify used to be its whole floor), else the exact prefix rung.
+      The CONTRACT predicates (same lang, set sizes within 20%, exact
+      Jaccard >= 0.8) run inside the kernel's join, and the reported
+      match is MIN(doc_id) per batch doc. Recall is EXACTLY 1 on
+      either rung — no probabilistic-recall caveat for the hash
+      oracle.
 
-    Why prefix and not C73's MinHash bands (the r9 verdict's literal
-    suggestion), A/B-measured at sf0.1 min-of-6 idle: building 32
-    minhashes per doc dominates — the banded form closed at 2.73 s
-    vs this form's parity with the old 1.25 s rolling min, and on
-    this fixture banding is also LESS selective than the length gate
-    (the jaccard_near_dedup strategy notes: a band chunk of a dense
+    Why the exact kernel and not C73's MinHash bands (the r9 verdict's
+    literal suggestion), A/B-measured at sf0.1 min-of-6 idle: building
+    32 minhashes per doc dominates — the banded form closed at 2.73 s
+    vs the prefix form's parity with the old 1.25 s rolling min, and
+    on this fixture banding is also LESS selective than the length
+    gate (the set_sim_pairs rung notes: a band chunk of a dense
     31-token vocabulary collides for ~20% of random pairs). C73
     remains the minhash-index rung for the open-vocabulary regime
     where signatures amortize across many probe batches.
 
     Scale: per ingest the corpus contributes index scans only — no
     tokenize, no sha, no text; candidate volume is bitmap-pruned
-    (exact) and prefix-pruned (near), never |batch| x |corpus|.
+    (exact) and block/length-gated or prefix-pruned (near), and the
+    corpus side streams past the broadcast batch.
     Pinned in tests/test_plans.py::test_c27_probes_read_index_not_text."""
     d = load_table(spark, sf_dir, "documents")
     # One persisted index pass over the fixture (widen: the fixture
     # scans as one split; hashing+tokenizing must not serialize onto
     # one core — no-op at real scale). Token hashes: set sizes (hence
-    # Jaccard) are preserved up to a 2^-64 collision, and
-    # array_intersect on primitive longs is ~2x string arrays (the
-    # jaccard_near_dedup argument — same oracle contract); sorted so
-    # the prefix filter's global order is the long order. In
+    # Jaccard) are preserved up to a 2^-64 collision (the
+    # jaccard_near_dedup argument — same oracle contract). In
     # production the corpus slice of this table is the standing index
     # built once per corpus version; only the batch slice is computed
     # per ingest — here both share the pass because the fixture ships
@@ -1350,16 +1405,13 @@ def q_c27_incremental_dedup(spark, sf_dir):
             "doc_id",
             "lang",
             F.sha2(F.col("text"), 256).alias("h"),
-            F.array_sort(token_hashes(tokenize(F.col("text")))).alias(
-                "htoks"
-            ),
+            token_hashes(tokenize(F.col("text"))).alias("toks"),
         )
-        .withColumn("n", F.size("htoks"))
-        # Eager localCheckpoint, not persist: three consumers (exact
-        # probe, prefix probe, verify fetch) read one materialization,
-        # and nothing lingers in the session cache after the query
-        # (ADVICE r10: the persist form leaked a cache entry per
-        # invocation across a 342-query session).
+        # Eager localCheckpoint, not persist: the exact probe and both
+        # near-probe sides read one materialization, and nothing
+        # lingers in the session cache after the query (ADVICE r10:
+        # the persist form leaked a cache entry per invocation across
+        # a 342-query session).
         .localCheckpoint(eager=True)
     )
     corpus = toks.filter(F.col("doc_id") % 10 != 7)
@@ -1377,103 +1429,13 @@ def q_c27_incremental_dedup(spark, sf_dir):
         .withColumnRenamed("b_doc", "b_id")
     )
 
-    # ---- near probe: adaptive, the C113/C18 playbook (round 13) ----
-    # The interpreted per-candidate array_intersect verify was this
-    # key's entire remaining floor (profiler: two ~2 s 32-task jobs on
-    # a 12-job query — candidate gen + verify). When the per-lang
-    # vocabulary fits the W-word mask rung (one cheap 1-row gate over
-    # the checkpointed index), both probe sides fold to masks and the
-    # verify becomes summed bit_count inside whole-stage codegen —
-    # i = |intersection| and n are the IDENTICAL integers (token
-    # hashes are array_distinct), so jac and the match set are
-    # value-identical to the prefix+intersect form, which remains the
-    # open-vocabulary fallback below (selective by Zipf exactly
-    # there). In production the masks live in the standing index the
-    # way htoks do.
-    fit = _block_bitmask_table(
-        toks.select("doc_id", "lang", F.explode("htoks").alias("tok")),
-        ["lang"],
+    # ---- near probe: the bipartite set-similarity kernel ----------
+    # In production the masks (auto rung) live in the standing index
+    # the way the token hashes do.
+    near = set_sim_pairs(corpus, ["lang"], 0.8, 0.2, probe=batch)
+    nr = near.groupBy(F.col("doc_id_2").alias("b_id")).agg(
+        F.min("doc_id_1").alias("nr_match")
     )
-    if fit is not None:
-        masked, n_words = fit
-        a = masked.filter(F.col("doc_id") % 10 != 7).alias("a")
-        b = F.broadcast(
-            masked.filter(F.col("doc_id") % 10 == 7).alias("b")
-        )
-        inter = _mask_intersection(n_words).cast("int")
-        jac = inter.cast("double") / (
-            F.col("b.n_toks") + F.col("a.n_toks") - inter
-        )
-        nr = (
-            a.join(
-                b,
-                (F.col("b.lang") == F.col("a.lang"))
-                & (
-                    F.abs(F.col("b.n_toks") - F.col("a.n_toks"))
-                    <= 0.2
-                    * F.greatest(F.col("b.n_toks"), F.col("a.n_toks"))
-                )
-                & (jac >= 0.8),
-            )
-            .groupBy(F.col("b.doc_id").alias("b_id"))
-            .agg(F.min(F.col("a.doc_id")).alias("nr_match"))
-        )
-    else:
-        # exact prefix-filter equi-join + verification (unchanged)
-        prefix_len = (
-            F.col("n") - F.ceil(F.lit(0.8) * F.col("n") - 1e-9) + 1
-        )
-
-        def prefix_of(df, id_alias):
-            return df.select(
-                F.col("doc_id").alias(id_alias),
-                F.explode(
-                    F.slice("htoks", F.lit(1), prefix_len)
-                ).alias("p"),
-            )
-
-        # No .distinct(): a pair sharing several prefix elements
-        # repeats, but the MIN(c_id) rollup absorbs duplicates and
-        # dropping the dedup removes a full (b_id, c_id) exchange —
-        # each repeat pays one extra in-memory verify, bounded by the
-        # prefix length.
-        cand_nr = (
-            F.broadcast(prefix_of(batch, "b_id"))
-            .join(prefix_of(corpus, "c_id"), "p")
-            .select("b_id", "c_id")
-        )
-        b_side = F.broadcast(
-            batch.select(
-                F.col("doc_id").alias("b_id"),
-                F.col("lang").alias("b_lang"),
-                F.col("htoks").alias("b_htoks"),
-                F.col("n").alias("b_n"),
-            )
-        )
-        c_side = corpus.select(
-            F.col("doc_id").alias("c_id"),
-            F.col("lang").alias("c_lang"),
-            F.col("htoks").alias("c_htoks"),
-            F.col("n").alias("c_n"),
-        )
-        inter = F.size(F.array_intersect("b_htoks", "c_htoks"))
-        jac = inter.cast("double") / (
-            F.col("b_n") + F.col("c_n") - inter
-        )
-        nr = (
-            cand_nr.join(b_side, "b_id")
-            .join(c_side, "c_id")
-            .filter(
-                (F.col("b_lang") == F.col("c_lang"))
-                & (
-                    F.abs(F.col("b_n") - F.col("c_n"))
-                    <= 0.2 * F.greatest(F.col("b_n"), F.col("c_n"))
-                )
-                & (jac >= 0.8)
-            )
-            .groupBy("b_id")
-            .agg(F.min("c_id").alias("nr_match"))
-        )
     return (
         ex.join(nr, "b_id", "full")
         .select(
@@ -1756,7 +1718,7 @@ def q_c58_cluster_canonicals(spark, sf_dir):
     one expression, not the plan.
 
     Scale: clustering cost is C18's (``strategy="adaptive"`` exact
-    candidate paths since round 9 — 64-bit set masks / prefix filter,
+    candidate paths since round 9 — W-word set masks / prefix filter,
     bit-identical pair set, allpairs kept as the pytest cross-check,
     then contracted label propagation); the re-rank adds one window
     over the label table partitioned by cluster_id — cluster-bounded
@@ -3268,78 +3230,33 @@ def q_c113_threshold_sweep_curve(spark, sf_dir):
 
     Scale: the round-7 form (lang-blocked all-pairs with per-pair
     array_intersect on the token arrays) was the bench's worst tail
-    (26.7 s official); it survives only as the pytest recall
-    cross-check. The registered query now ADAPTS on a measured
-    1-row statistic (max per-lang vocabulary, one tiny aggregate):
-
-    * vocabulary fits 64 * W bits (W <= _mask_max_words(), default 8
-      words; this fixture: 31 tokens/lang -> one word) -> BITMASK-SET
-      path: each doc's distinct-token set becomes W 64-bit integers
-      (bit index = rarest-first (df, tok) rank, a 155-row window);
-      i = sum_w bit_count(m_w_a & m_w_b), u = n_a + n_b - i — the
-      verify drops from array intersection to 2W integer
-      instructions per pair, and the probe side is a 5k-row
-      broadcast so NO shuffle reaches the pair stage. (Round 13:
-      the multi-word rung — dense-but-bounded vocabularies, e.g.
-      namespaced 10x replicas at 310 tokens/lang, used to fall off
-      at 64 bits into the degenerate-prefix regime.)
-    * otherwise -> EXACT PREFIX FILTERING (AllPairs/PPJoin,
-      Bayardo et al. WWW'07): per lang, tokens totally ordered
-      rarest-first by (df, tok); a doc of n distinct tokens emits
-      its first n DIV 2 + 1 under that order, and any J >= 0.5
-      pair provably shares an emitted token (if all shared tokens
-      sat in the last ceil(n/2)-1 positions then i < ceil(0.5·n)
-      <= the i forced by J >= 0.5 via u >= n). Subquadratic on
-      real Zipfian vocabularies because rare-first ordering keeps
-      hot tokens out of prefixes.
-
-    Both paths have recall EXACTLY 1 — required because the DuckDB
-    oracle counts every qualifying pair; C8's MinHash banding
-    (recall < 1 at the 0.5 floor) would break the hash match.
-    Cross-checks: tests/test_sampling.py::
-    test_c113_candidate_paths_agree runs all three forms."""
+    (26.7 s official); it survives only as the pytest reference. The
+    registered query is the planted corpus -> ``set_sim_pairs`` (auto
+    rung, t = 0.5, length band 0.5 — the pigeonhole gate J >= 0.5
+    forces min >= max/2, and the kernel's bound at t = 0.5 IS the
+    integer 2i >= u) -> the band fold. On this fixture's 31 tokens/lang
+    the gate takes a one-word mask; namespaced 10x replicas (310
+    tokens/lang) take a 5-word mask; an open vocabulary takes the
+    exact prefix rung. Every rung has recall EXACTLY 1 — required
+    because the DuckDB oracle counts every qualifying pair; C8's
+    MinHash banding (recall < 1 at the 0.5 floor) would break the hash
+    match. Cross-checks: tests/test_sampling.py::
+    test_c113_candidate_paths_agree runs every rung against the
+    blocked all-pairs reference."""
     sized = _c113_sized_corpus(spark, sf_dir)
-    bit_tbl = _c113_bit_table(sized).persist(StorageLevel.MEMORY_AND_DISK)
-    # max assigned bit index decides the path BEFORE any mask is
-    # built — shiftleft wraps silently at >= 64, so the gate must
-    # read the vocabulary, not the masks.
-    vmax = bit_tbl.agg(F.max("bit").alias("m")).first()["m"]
-    masked = None
-    # vmax is NULL on an empty corpus (no rows survive the size(raw)>0
-    # filter): fall through to the prefix path, which degrades to an
-    # empty curve instead of a NoneType comparison crash.
-    # Round 13 (verdict task 1): the mask rung now serves vocabularies
-    # up to 64 * _mask_max_words() bits (multi-word masks, W ANDs +
-    # popcounts per pair) — the dense-but-bounded regime that used to
-    # degrade to ~all-pairs prefix candidates (10x probe: 160-219 s).
-    if vmax is not None and vmax < 64 * _mask_max_words():
-        n_words = vmax // 64 + 1
-        masked = _c113_doc_masks(sized, bit_tbl, n_words).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        out = _c113_fold_bands(
-            _c113_bitmask_pairs(sized, bit_tbl, masked, n_words)
-        )
-    else:
-        # Fallback boundary (round 12): re-widen the persisted corpus
-        # to full session width before the INTERPRETED prefix path —
-        # the adaptive narrow entry is sized for the bitmask path's
-        # codegen work only (see jaccard_near_dedup's identical note).
-        sized_w = widen(sized)
-        out = _c113_band_curve(sized_w, _c113_prefix_candidates(sized_w))
-    result = out.localCheckpoint(eager=True)
-    if masked is not None:
-        masked.unpersist()
-    bit_tbl.unpersist()
+    pairs = set_sim_pairs(sized, ["lang"], 0.5, 0.5)
+    result = _c113_fold_bands(pairs).localCheckpoint(eager=True)
+    for df in pairs.held:
+        df.unpersist()
     sized.unpersist()
     return result
 
 
 def _c113_sized_corpus(spark, sf_dir):
-    """C113's planted corpus as (doc_id, lang, toks, n), persisted.
+    """C113's planted corpus as (doc_id, lang, toks), persisted.
 
-    toks is the sorted distinct xxhash64 token-set; plants are the
-    nested-set clones described in q_c113_threshold_sweep_curve."""
+    toks is the distinct xxhash64 token-set; plants are the nested-set
+    clones described in q_c113_threshold_sweep_curve."""
     # adaptive_width (round 12): the bitmask path downstream is pure
     # integer codegen, so the planted fixture corpus does not need the
     # full 32-way fan-out — measured 5.7 -> 3.0 s warm on q_c113.
@@ -3363,184 +3280,23 @@ def _c113_sized_corpus(spark, sf_dir):
         )
     return (
         corpus.filter(F.size("raw") > 0)
-        .select(
-            "doc_id",
-            "lang",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform("raw", lambda t: F.xxhash64(t))
-                )
-            ).alias("toks"),
-        )
-        .withColumn("n", F.size("toks"))
+        .select("doc_id", "lang", token_hashes("raw").alias("toks"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
-def _c113_length_compatible():
-    """Shared candidate length gate: J >= 0.5 forces min >= max/2."""
-    return F.abs(F.col("a.n") - F.col("b.n")) <= 0.5 * F.greatest(
-        F.col("a.n"), F.col("b.n")
-    )
-
-
-def _c113_prefix_candidates(sized):
-    """Exact prefix-filter candidate ids (d1 < d2) for J >= 0.5.
-
-    Rare-first total order per lang: (df, tok) ascending, df = number
-    of corpus docs containing tok in that lang. Each doc emits its
-    first n DIV 2 + 1 ordered tokens; candidates are prefix-token
-    collisions passing the length gate. Deterministic (ties in df
-    break on the token hash) and recall-1 by the prefix lemma."""
-    tok = sized.select(
-        "doc_id", "lang", "n", F.explode("toks").alias("tok")
-    )
-    df_tbl = tok.groupBy("lang", "tok").agg(F.count("*").alias("df"))
-    prefix = (
-        tok.join(df_tbl, ["lang", "tok"])
-        .groupBy("doc_id", "lang", "n")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("df", "tok"))).alias(
-                "ordered"
-            )
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "n",
-            F.explode(
-                F.transform(
-                    F.slice("ordered", 1, F.expr("n div 2 + 1")),
-                    lambda s: s["tok"],
-                )
-            ).alias("tok"),
-        )
-    )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & _c113_length_compatible(),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
-        .distinct()
-    )
-
-
-def _c113_bit_table(sized):
-    """Per-lang vocabulary with rarest-first bit index (df, tok rank).
-
-    <= |vocab| rows per lang; the max bit gates the bitmask path."""
-    from pyspark.sql.window import Window
-
-    return (
-        sized.select("doc_id", "lang", F.explode("toks").alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "bit",
-            F.row_number().over(
-                Window.partitionBy("lang").orderBy("df", "tok")
-            )
-            - 1,
-        )
-        .select("lang", "tok", "bit")
-    )
-
-
-def _c113_doc_masks(sized, bit_tbl, n_words: int = 1):
-    """Fold each doc's distinct-token set into a W-word bitmask."""
-    return (
-        sized.select("doc_id", "lang", F.explode("toks").alias("tok"))
-        .join(F.broadcast(bit_tbl), ["lang", "tok"])
-        .groupBy("doc_id", "lang")
-        .agg(*_mask_word_cols(n_words))
-        .withColumn("n", _mask_popcount(n_words).cast("int"))
-    )
-
-
-def _c113_bitmask_pairs(sized, bit_tbl, masked=None, n_words: int = 1):
-    """Exact (d1, d2, i, u) pairs via W-word set masks (vocab <= 64W).
-
-    Each doc folds to W longs (bit index from bit_tbl); the pair
-    stage is a broadcast hash join on lang with the full J >= 0.5
-    pigeonhole length gate, i via summed bit_count(m_w & m_w) — pure
-    codegen integer ops, no shuffle on the probe side and no arrays
-    at pair time. Pass a persisted `masked` (from _c113_doc_masks)
-    so the broadcast build does not recompute the fold."""
-    if masked is None:
-        masked = _c113_doc_masks(sized, bit_tbl, n_words)
-    a, b = masked.alias("a"), F.broadcast(masked.alias("b"))
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & _c113_length_compatible(),
-    )
-    i = _mask_intersection(n_words).cast("long")
-    return pairs.select(
-        F.col("a.doc_id").alias("d1"),
-        F.col("b.doc_id").alias("d2"),
-        i.alias("i"),
-        (F.col("a.n") + F.col("b.n") - i).alias("u"),
-    )
-
-
-def _c113_allpairs_candidates(sized):
-    """Round-7 DEMO path: lang-blocked all-pairs with the length gate.
-
-    Quadratic in the lang block — kept ONLY as the pytest recall
-    cross-check against _c113_prefix_candidates; the registered query
-    no longer runs it (round-7 verdict: 26.7 s bench tail at sf0.1)."""
-    a, b = sized.alias("a"), sized.alias("b")
-    return a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & _c113_length_compatible(),
-    ).select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-
-
-def _c113_band_curve(sized, cand_ids):
-    """Verify candidate id pairs exactly and fold into the band curve.
-
-    Integer-exact: i/u from array_intersect sizes, gate 2i >= u,
-    band = (10·i) DIV u — identical arithmetic to the DuckDB oracle."""
-    left = sized.select(
-        F.col("doc_id").alias("d1"),
-        F.col("toks").alias("ta"),
-        F.col("n").alias("na"),
-    )
-    right = sized.select(
-        F.col("doc_id").alias("d2"),
-        F.col("toks").alias("tb"),
-        F.col("n").alias("nb"),
-    )
-    i = F.size(F.array_intersect("ta", "tb"))
-    u = F.col("na") + F.col("nb") - i
-    return _c113_fold_bands(
-        cand_ids.join(left, "d1")
-        .join(right, "d2")
-        .select("d1", "d2", i.alias("i"), u.alias("u"))
-    )
-
-
 def _c113_fold_bands(pairs):
-    """(d1, d2, i, u) -> the band-tenths histogram (shared fold)."""
+    """(doc_id_1, doc_id_2, i, u) -> the band-tenths histogram."""
     banded = pairs.filter(2 * F.col("i") >= F.col("u")).select(
-        "d1",
-        "d2",
+        "doc_id_1",
+        "doc_id_2",
         F.expr("10 * i div u").cast("long").alias("band_tenths"),
     )
     return (
-        banded.select("band_tenths", F.col("d1").alias("d"))
-        .unionByName(banded.select("band_tenths", F.col("d2").alias("d")))
+        banded.select("band_tenths", F.col("doc_id_1").alias("d"))
+        .unionByName(
+            banded.select("band_tenths", F.col("doc_id_2").alias("d"))
+        )
         .groupBy("band_tenths")
         .agg(
             (F.count("*") / 2).cast("long").alias("n_pairs"),

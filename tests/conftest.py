@@ -16,6 +16,11 @@ if str(REPO) not in sys.path:
 # Small-and-fast for unit/oracle tests; bench.py uses the full profile.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
+# Bounded driver heap: under the engine's 48g default the one JVM of a
+# full test session keeps growing its heap instead of collecting, and
+# on a 16 GB host the kernel OOM-killed it at ~14.6 GB RSS late in the
+# suite. The tests run on sf0.001 fixtures; 6g leaves ample headroom.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

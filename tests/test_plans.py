@@ -624,6 +624,39 @@ def test_plan_lint_no_new_antipatterns(spark, sf_dir):
     assert not dead, f"dead allowlist entries — delete them: {dead}"
 
 
+def test_one_set_similarity_kernel():
+    """Source lint in the plan lint's spirit: the exact Jaccard ladder
+    has ONE implementation, so under operators/ only the kernel
+    ``set_sim_pairs`` may call its rung builders. A private copy of the
+    mask gate, the mask overlap or the triangle join fails here with
+    its file, line and caller. Matches call names only —
+    ``array_intersect`` stays legal (q_c73/q_c109 verify other
+    predicates with it)."""
+    import ast
+    from pathlib import Path
+
+    rungs = {
+        "_block_bitmask_table",
+        "_mask_intersection",
+        "_allpairs_triangle_join",
+    }
+    ops = Path(registry.__file__).resolve().parent / "operators"
+    hits = []
+    for path in sorted(ops.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", None)
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None
+                )
+                if name in rungs and owner != "set_sim_pairs":
+                    hits.append(f"{path.name}:{node.lineno} {owner} -> {name}")
+    assert not hits, f"set-similarity rungs called outside the kernel: {hits}"
+
+
 def test_cached_multi_action_reads_memory_not_files(spark, sf_dir):
     """B117: both aggregation branches of the union must read the
     cached intermediate (two InMemoryTableScans), and the file scan

@@ -4,7 +4,7 @@ just the fixtures."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -1825,6 +1825,7 @@ doc_texts = st.lists(
 
 
 @given(texts=doc_texts, threshold=st.sampled_from([0.3, 0.6, 0.8]))
+@example(texts=[], threshold=0.6)
 @_settings
 def test_jaccard_near_dedup_matches_python_bruteforce(
     spark, texts, threshold
@@ -1834,25 +1835,42 @@ def test_jaccard_near_dedup_matches_python_bruteforce(
     strategy tests only cross-compare strategies on the fixture): pair
     set, order normalization (doc_id_1 < doc_id_2), and the Jaccard
     value itself must match for arbitrary token overlap structure,
-    inside the same 20% length band."""
-    from etl_spark_eks_spark.operators.dedup import jaccard_near_dedup
+    inside the same 20% length band. The kernel's bipartite mode gets
+    the same check on every rung, with the docs split by id parity into
+    index (even, doc_id_1) and probe (odd, doc_id_2). The empty corpus
+    (the auto gate's NULL-vmax path) must return no rows anywhere."""
+    from etl_spark_eks_spark.functions.text import token_hashes, tokenize
+    from etl_spark_eks_spark.operators.dedup import (
+        jaccard_near_dedup,
+        set_sim_pairs,
+    )
 
     rows = [(i, t, "xx") for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
     sets = {i: frozenset(t.split()) for i, t in enumerate(texts)}
-    expect = set()
-    for a in sets:
-        for b in sets:
-            if a >= b:
-                continue
-            na, nb = len(sets[a]), len(sets[b])
-            if abs(na - nb) > 0.2 * max(na, nb):
-                continue
-            inter = len(sets[a] & sets[b])
-            j = inter / (na + nb - inter)
-            if j >= threshold:
-                expect.add((a, b, round(j, 9)))
+
+    def jaccard(a, b):
+        na, nb = len(sets[a]), len(sets[b])
+        if abs(na - nb) > 0.2 * max(na, nb):
+            return None
+        inter = len(sets[a] & sets[b])
+        j = inter / (na + nb - inter)
+        return round(j, 9) if j >= threshold else None
+
+    expect = {
+        (a, b, j)
+        for a in sets
+        for b in sets
+        if a < b and (j := jaccard(a, b)) is not None
+    }
+    expect_bipartite = {
+        (a, b, j)
+        for a in sets
+        if a % 2 == 0
+        for b in sets
+        if b % 2 == 1 and (j := jaccard(a, b)) is not None
+    }
 
     for strategy in ("prefix", "allpairs", "adaptive"):
         got = {
@@ -1863,6 +1881,20 @@ def test_jaccard_near_dedup_matches_python_bruteforce(
             ).collect()
         }
         assert got == expect, (strategy, got ^ expect)
+
+    hashed = df.select(
+        "doc_id", "lang", token_hashes(tokenize("text")).alias("toks")
+    )
+    index = hashed.filter(F.col("doc_id") % 2 == 0)
+    probe = hashed.filter(F.col("doc_id") % 2 == 1)
+    for rung in ("prefix", "allpairs", "auto"):
+        got = {
+            (r["doc_id_1"], r["doc_id_2"], round(r["i"] / r["u"], 9))
+            for r in set_sim_pairs(
+                index, ["lang"], threshold, 0.2, rung, probe=probe
+            ).collect()
+        }
+        assert got == expect_bipartite, (rung, got ^ expect_bipartite)
 
 
 payloads = st.lists(

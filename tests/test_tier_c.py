@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_eks_spark import registry
 from etl_spark_eks_spark.catalog import load_table
-from etl_spark_eks_spark.functions.text import tokenize
+from etl_spark_eks_spark.functions.text import token_hashes, tokenize
 from etl_spark_eks_spark.operators.similarity import knn_cosine_bruteforce
 
 registry.load_all()
@@ -434,22 +434,15 @@ def test_adaptive_multiword_mask_matches_allpairs(spark):
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
     # the gate really picks a multi-word mask (not the prefix fallback)
-    tok_long = df.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.array_distinct(
-                F.transform(tokenize("text"), lambda t: F.xxhash64(t))
-            )
-        ).alias("tok"),
+    sets = df.select(
+        "doc_id", "lang", token_hashes(tokenize("text")).alias("toks")
     )
-    fit = _block_bitmask_table(tok_long, ["lang"])
+    fit = _block_bitmask_table(sets, ["lang"])
     assert fit is not None, "150-token vocab must fit the multi-word rung"
-    masked, n_words = fit
-    try:
-        assert n_words == 3, n_words
-    finally:
-        masked.unpersist()
+    *_, n_words, held = fit
+    for frame in held:
+        frame.unpersist()
+    assert n_words == 3, n_words
 
     got = {}
     for strategy in ("adaptive", "allpairs"):
@@ -465,17 +458,16 @@ def test_adaptive_multiword_mask_matches_allpairs(spark):
 
 
 def test_c113_multiword_mask_band_curve_matches(spark):
-    """Round 13: q_c113's dedicated mask path with a >64-token
-    vocabulary (W=2 words) must fold the identical band curve as the
-    blocked all-pairs reference."""
+    """q_c113's kernel call (auto rung, t = 0.5, length band 0.5) with a
+    >64-token vocabulary must take a W=2-word mask and fold the
+    identical band curve as the blocked all-pairs reference."""
     from pyspark.storagelevel import StorageLevel
+    from set_sim_reference import c113_allpairs_curve
 
     from etl_spark_eks_spark.operators.dedup import (
-        _c113_allpairs_candidates,
-        _c113_band_curve,
-        _c113_bit_table,
-        _c113_bitmask_pairs,
+        _block_bitmask_table,
         _c113_fold_bands,
+        set_sim_pairs,
     )
 
     vocab = [f"v{i:03d}" for i in range(100)]
@@ -487,30 +479,20 @@ def test_c113_multiword_mask_band_curve_matches(spark):
         if d % 4 == 0:  # nested truncation -> mid bands
             rows.append((d + 500, "yy", " ".join(toks[:14])))
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    sized = (
-        df.select(
-            "doc_id",
-            "lang",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(tokenize("text"), lambda t: F.xxhash64(t))
-                )
-            ).alias("toks"),
-        )
-        .withColumn("n", F.size("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sized = df.select(
+        "doc_id", "lang", token_hashes(tokenize("text")).alias("toks")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        bit_tbl = _c113_bit_table(sized)
-        vmax = bit_tbl.agg(F.max("bit").alias("m")).first()["m"]
-        assert vmax is not None and 64 <= vmax < 128, vmax
-        n_words = vmax // 64 + 1
+        fit = _block_bitmask_table(sized, ["lang"])
+        assert fit is not None, "100-token vocab must fit the mask rung"
+        *_, n_words, held = fit
+        for frame in held:
+            frame.unpersist()
+        assert n_words == 2, n_words
         mask_curve = _c113_fold_bands(
-            _c113_bitmask_pairs(sized, bit_tbl, n_words=n_words)
+            set_sim_pairs(sized, ["lang"], 0.5, 0.5)
         ).collect()
-        allpairs_curve = _c113_band_curve(
-            sized, _c113_allpairs_candidates(sized)
-        ).collect()
+        allpairs_curve = c113_allpairs_curve(sized).collect()
     finally:
         sized.unpersist()
     assert [tuple(r) for r in mask_curve] == [

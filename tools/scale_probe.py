@@ -122,10 +122,7 @@ PROBE_QUERIES = (
     "q_c102_substring_span_surgery",
     # round-7 additions over documents/lineitem (q_b164-q_b166 join the
     # symlinked orders/customer tables and q_b154/q_b167-q_b170 run on
-    # symlinked orders — absent per the measure-the-op rule; q_c113's
-    # blocked all-pairs is deliberately absent for the same reason as
-    # q_c2/q_c18: block population grows with the corpus BY CONTRACT,
-    # the documented demo path with C8 banding as the scale rung)
+    # symlinked orders — absent per the measure-the-op rule)
     "q_c110_packed_chunk_map",
     "q_c111_dup_cluster_histogram",
     "q_c112_benchmark_contamination_matrix",
@@ -141,9 +138,7 @@ PROBE_QUERIES = (
     "q_m18_paired_modality_dedup",
     # round-8 additions over documents (q_b176-q_b179 run on the
     # symlinked lineitem/orders tables or are metadata-only — absent
-    # per the measure-the-op rule; q_c113's registered bitmask path is
-    # vocab-gated and the replicas' namespaced vocab (31 x mult) would
-    # measure the gate, not the op — see SCALE.md round 8)
+    # per the measure-the-op rule)
     "q_c124_heavy_hitters_sketch",
     "q_c125_token_entropy_profile",
     "q_c126_url_canonical_dedup",
@@ -159,14 +154,19 @@ PROBE_QUERIES = (
     # round-12 (optimization): the CC local-finish + adaptive-width
     # keys join the standing list — the probe is what bounds the
     # union-find cap's regime (bridges grow ~linearly in the
-    # namespaced replicas) and the width estimate's growth.
+    # namespaced replicas) and the width estimate's growth. Both keys
+    # take set_sim_pairs' auto rung, and the replicas' namespaced vocab
+    # (31 tokens/lang x mult) widens its mask from 1 word at 1x to 5
+    # words at 10x — the probe watches the mask rung, not a fallback.
     "q_c18_dedup_clusters",
     "q_c113_threshold_sweep_curve",
     # round-10 additions over documents/embeddings. q_c133 is absent:
     # the replicas namespace every token, so the lexicon join drops
     # all non-copy-0 tokens and a probe would measure the scan gate,
     # not the shingle contraction (the same vocabulary-gate rule as
-    # q_c113). q_c27's unified index path rides q_c128/q_c16 probes.
+    # q_c113). q_c27 is covered by its parts: the exact probe rides
+    # q_c128, the near probe is set_sim_pairs in bipartite mode (auto
+    # rung as in q_c18/q_c113; prefix rung as in q_c16).
     "q_c129_suffix_lcp_spans",
     "q_c130_repetition_loop",
     "q_c131_fertility_audit",
@@ -185,13 +185,13 @@ PROBE_QUERIES = (
     "q_c145_ivf_quantizer_gate",
     "q_c142_pq_convergence_gate",
 )
-# q_c18/q_c2/q_c58 (blocked ALL-PAIRS Jaccard) are deliberately absent: their
+# q_c2/q_c19 (set_sim_pairs' ALL-PAIRS rung) are deliberately absent: their
 # blocking contract is (lang, token-count band), so block population —
 # and with it pairwise work — grows with the corpus. That is the
 # documented reason they are NOT the corpus-scale near-dup path (C8's
 # content-keyed buckets are; q_c16's prefix-filter candidates likewise
 # key on shared content). Probing them at 10x measures the contract,
-# not a regression.
+# not a regression. q_c58 is q_c18's pair path plus one window.
 
 
 def build_replica(spark, mult: int) -> str:
