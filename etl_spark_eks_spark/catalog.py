@@ -6,9 +6,17 @@ Spark-native equivalent: ``spark.read.parquet`` per table + temp views,
 so both the DataFrame API and ``spark.sql`` see the same names — the
 same names DuckDB pre-registers for the oracle.
 
+The crawler resolves a table's schema once and every reader takes it
+from the catalog. ``raw_table`` does the same within one process: the
+first read of a table runs Spark's parquet schema inference (one Spark
+job), and every later read passes the stored schema to
+``spark.read.schema(...)``, which launches no job. The cache key is the
+path, the files' name/size/mtime fingerprint (a fixture regenerated in
+place is re-inferred) and the session confs that steer inference.
+
 Scale note: at 100 TB these would be real catalog tables (partitioned,
-possibly bucketed on join keys); the loader keeps a single entry point
-so that swap is one function.
+possibly bucketed on join keys) whose schemas a metastore holds; the
+loader keeps a single entry point so that swap is one function.
 """
 
 from __future__ import annotations
@@ -18,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_spark_eks_spark.sources.parquet_io import fixture_fingerprint
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -39,8 +49,55 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# Session confs that change what parquet schema inference returns for
+# the same files.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    NANOS_AS_LONG,
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+
+# (path, fixture fingerprint, inference conf values) -> inferred schema.
+# Two concurrent misses on one key both infer and store the same
+# schema, so the dict needs no lock.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet scan of a fixture table as stored, columns un-normalized.
+
+    The schema comes from the process-wide cache; a miss runs the
+    inferring read and stores its schema. Reading ``events`` sets
+    nanosAsLong on the session and leaves it set: the scan needs it at
+    execution time, including a stream's scans over staged copies.
+    """
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    if name == "events":
+        spark.conf.set(NANOS_AS_LONG, "true")
+    path = table_path(sf_dir, name)
+    key = (
+        path,
+        fixture_fingerprint(sf_dir, name),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan (SURVEY §2 A1): schema from footers, multi-file capable.
+    """Parquet scan (SURVEY §2 A1), multi-file capable, with the schema
+    inferred from the footers once per process (``raw_table``). That
+    cache stands in, within one process, for the Glue table schema the
+    crawler writes once; at 100 TB a metastore holds it.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark 4 refuses to
     read natively; we read it as int64 nanos (legacy conf) and truncate
@@ -48,15 +105,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ns->µs truncation, so oracle comparisons stay exact. (Float division
     would lose precision: 2024 epoch-nanos ≈ 1.7e18 > 2^53.)
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    df = raw_table(spark, sf_dir, name)
+    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def widen(df: DataFrame, partitions: int | None = None) -> DataFrame:
@@ -113,6 +165,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     ``spark.sql("SELECT ... FROM lineitem ...")`` works like Athena over
     the crawled table (reference: addons.tf:285-297).
     """
+    # The events read sets nanosAsLong, and that conf is part of the
+    # schema-cache key: set it first, so every table is cached under the
+    # value the later reads see.
+    spark.conf.set(NANOS_AS_LONG, "true")
     out: dict[str, DataFrame] = {}
     for name in TABLES:
         df = load_table(spark, sf_dir, name)

@@ -647,31 +647,30 @@ def q_b154_arrow_python_udf(spark, sf_dir):
 def q_b171_pandas_on_spark(spark, sf_dir):
     """B171: the pandas-on-Spark API (`pyspark.pandas`) — the THIRD
     user surface after DataFrame and SQL, and the one a
-    pandas-codebase migration arrives through: read_parquet →
-    boolean-mask filter → merge → groupby/agg → sort_values, spelled
-    exactly as pandas, planned by Catalyst. The operator's claim is
-    semantic identity: the ps chain must hash-match the relational
-    oracle — same filter, join, and grouping — proving the compat
-    layer is a FRONT-END (every step lowers to the same plan the
-    DataFrame API builds), not a reimplementation with pandas row
-    semantics.
+    pandas-codebase migration arrives through: the catalog tables
+    handed over with `pandas_api()` → boolean-mask filter → merge →
+    groupby/agg → sort_values, spelled exactly as pandas, planned by
+    Catalyst. The operator's claim is semantic identity: the ps chain
+    must hash-match the relational oracle — same filter, join, and
+    grouping — proving the compat layer is a FRONT-END (every step
+    lowers to the same plan the DataFrame API builds), not a
+    reimplementation with pandas row semantics.
 
-    Cost notes a migration must know, encoded here: ps attaches a
-    default index — `to_spark()` before returning drops it, and
-    index-free chains avoid the distributed-sequence zipWithIndex
-    pass; sort_values is declarative (lazy) like orderBy, nothing
-    like pandas' eager in-memory sort. Aggregates are
-    integer-exact (counts, key extremes) so the surface demo carries
-    a total hash match.
+    Cost notes a migration must know, encoded here: `pandas_api()`
+    attaches the same default index as `ps.read_parquet` (which would
+    also pay a footer-inference job per call) — `to_spark()` before
+    returning drops it, and index-free chains avoid the
+    distributed-sequence zipWithIndex pass; sort_values is
+    declarative (lazy) like orderBy, nothing like pandas' eager
+    in-memory sort. Aggregates are integer-exact (counts, key
+    extremes) so the surface demo carries a total hash match.
 
     Scale: identical to the equivalent DataFrame plan — the filter
     pushes to the scan, the merge is the same hash join, groupby the
     same partial agg; the ONLY ps-specific hazard is the default
     index (a corpus-wide sequence), avoided as above."""
-    import pyspark.pandas as ps
-
-    pso = ps.read_parquet(f"{sf_dir}/orders.parquet")
-    psc = ps.read_parquet(f"{sf_dir}/customer.parquet")
+    pso = load_table(spark, sf_dir, "orders").pandas_api()
+    psc = load_table(spark, sf_dir, "customer").pandas_api()
     big = pso[pso.o_totalprice > 100000]
     joined = big.merge(
         psc[["c_custkey", "c_mktsegment"]],

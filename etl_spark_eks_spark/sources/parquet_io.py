@@ -61,11 +61,12 @@ def fresh_scratch(*parts: str) -> str:
 
 
 def fixture_fingerprint(sf_dir: str, table: str) -> str:
-    """Content key for staged-landing sentinels: name+size+mtime of every
-    file under the source parquet table. If the fixture is regenerated in
-    place, the fingerprint changes and the landing copy is re-staged —
-    a tag-only sentinel would silently keep comparing a stale staged copy
-    against a live oracle read of the regenerated fixture."""
+    """Content key for staged-landing sentinels and the catalog's schema
+    cache: name+size+mtime of every file under the source parquet table.
+    If the fixture is regenerated in place, the fingerprint changes, the
+    landing copy is re-staged and the schema re-inferred — a tag-only
+    sentinel would silently keep comparing a stale staged copy against a
+    live oracle read of the regenerated fixture."""
     import hashlib
 
     root = os.path.join(sf_dir, f"{table}.parquet")

@@ -657,6 +657,64 @@ def test_one_set_similarity_kernel():
     assert not hits, f"set-similarity rungs called outside the kernel: {hits}"
 
 
+def _fixture_read_bypasses(tree) -> list[int]:
+    """Lines of ``.parquet(table_path(...))`` calls and of
+    ``read_parquet(f"...{sf_dir}...")`` calls in ``tree``."""
+    import ast
+
+    def name_of(f):
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    def names_sf_dir(arg):
+        return isinstance(arg, ast.JoinedStr) and any(
+            isinstance(v, ast.FormattedValue)
+            and isinstance(v.value, ast.Name)
+            and v.value.id == "sf_dir"
+            for v in arg.values
+        )
+
+    def bypasses(call):
+        name = name_of(call.func)
+        if name == "parquet":
+            return any(
+                isinstance(a, ast.Call) and name_of(a.func) == "table_path"
+                for a in call.args
+            )
+        return name == "read_parquet" and any(map(names_sf_dir, call.args))
+
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and bypasses(node)
+    )
+
+
+def test_fixture_reads_go_through_catalog():
+    """Source lint: a fixture table's schema is inferred once per
+    process, inside ``catalog.raw_table``. Anywhere else in the package,
+    reading a fixture path directly re-runs parquet footer inference,
+    one Spark job per call. Reads of paths a query wrote itself (sinks,
+    round-trips) stay legal."""
+    import ast
+    from pathlib import Path
+
+    bad = ast.parse(
+        'spark.read.parquet(table_path(sf_dir, "events"))\n'
+        'ps.read_parquet(f"{sf_dir}/orders.parquet")\n'
+        'spark.read.parquet(sink)\n'
+    )
+    assert _fixture_read_bypasses(bad) == [1, 2]
+
+    pkg = Path(registry.__file__).resolve().parent
+    hits = [
+        f"{path.relative_to(pkg)}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "catalog.py"
+        for line in _fixture_read_bypasses(ast.parse(path.read_text()))
+    ]
+    assert not hits, f"fixture reads that bypass the catalog: {hits}"
+
+
 def test_cached_multi_action_reads_memory_not_files(spark, sf_dir):
     """B117: both aggregation branches of the union must read the
     cached intermediate (two InMemoryTableScans), and the file scan
